@@ -2,12 +2,14 @@
 PageRank, so rank-mass conservation, positivity, and hub/degree
 consistency are pinned here."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from watermill_kinesis_spark.operators.graph import (
     PAGERANK_DAMPING,
     PAGERANK_TOP,
     bipartite_edges,
+    graph_bfs_hops,
     pagerank,
 )
 from watermill_kinesis_spark.registry import queries
@@ -54,6 +56,35 @@ def test_pagerank_top_nodes_are_high_degree(spark, sf_dir):
     best_node = f"{best['node_type']}:{best['node_key']}"
     max_deg = max(deg.values())
     assert deg[best_node] >= 0.5 * max_deg
+
+
+@pytest.mark.parametrize("operator", [pagerank, graph_bfs_hops])
+def test_loop_operator_failure_restores_conf_and_caches(
+    spark, sf_dir, monkeypatch, operator
+):
+    """A failure mid-loop leaves the session as the call found it: AQE
+    at its prior value and no cache or checkpoint left pinned. Both
+    operators checkpoint their loop state once before the loop and
+    once per step, so the third localCheckpoint fails in the second
+    step, after the edge caches have been materialized."""
+    sc = spark.sparkContext
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
+    n_persisted = len(sc._jsc.getPersistentRDDs())
+    df_class = type(spark.range(1))  # the session's concrete DataFrame
+    real = df_class.localCheckpoint
+    calls = []
+
+    def failing_checkpoint(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected mid-loop failure")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "localCheckpoint", failing_checkpoint)
+    with pytest.raises(RuntimeError, match="injected mid-loop failure"):
+        operator(spark, sf_dir)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
+    assert len(sc._jsc.getPersistentRDDs()) == n_persisted
 
 
 def _brute_jaccard(adj_rows, t=0.3):

@@ -974,3 +974,16 @@ def test_statestore_reader_matches_live_query(spark, sf_dir):
     assert all(r.state_matches_live for r in rows)
     assert all(r.n_state_operators == 1 for r in rows)
     assert all(r.n_state is not None and r.n_live is not None for r in rows)
+
+
+def test_session_checkpoint_file_manager_resolves(spark):
+    """Engine sessions write streaming checkpoints through Spark's
+    FileSystem-based manager. Spark resolves the class only when a
+    query starts, so a package move in a Spark upgrade would otherwise
+    surface as a ClassNotFoundException at every writeStream.start()."""
+    name = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert name.endswith(".FileSystemBasedCheckpointFileManager"), name
+    try:
+        spark._jvm.java.lang.Class.forName(name)
+    except Exception as e:  # py4j wraps the JVM's ClassNotFoundException
+        pytest.fail(f"checkpoint file manager {name} not on the classpath: {e}")

@@ -25,11 +25,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> int:
     names = sys.argv[1:]
-    os.environ["SPARK_GRAFT_UI"] = "1"
     from pyspark.sql import SparkSession
 
     from watermill_kinesis_spark.registry import queries
-    from watermill_kinesis_spark.session import default_parallelism
+    from watermill_kinesis_spark.session import (
+        CHECKPOINT_FILE_MANAGER,
+        default_parallelism,
+    )
 
     n = default_parallelism()
     spark = (
@@ -51,6 +53,10 @@ def main() -> int:
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config(
             "spark.python.daemon.module", "watermill_kinesis_spark.fastdaemon"
+        )
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
         )
         .getOrCreate()
     )

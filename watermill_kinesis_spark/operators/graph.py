@@ -332,87 +332,98 @@ def pagerank(
     sort-merge spills and streams at any scale)."""
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
 
-    # persist the base edge relation for the setup phase (optimization
-    # round 14): it feeds deg, the deg-count, AND both sides of the
-    # edges_deg join — unpersisted, the orders⋈lineitem distinct
-    # pipeline was planned and EXECUTED four times at materialization
-    # (profiled: 4 × ~0.5 s identical 5.5 MB exchange-write stages)
-    edges = bipartite_edges(spark, sf_dir).persist(StorageLevel.DISK_ONLY)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    # Geometry-derived partition count for the persisted loop state
-    # (optimization round 14, guide §2): the caches previously pinned
-    # spark.sql.shuffle.partitions (32) partitions, and EVERY
-    # iteration's map stages — cache scan, sort, shuffle write — ran
-    # 32 near-empty tasks over ~5 MB of edges at sf0.1 (profiled
-    # 9-19 s of per-stage task run time carrying ~2 s of CPU). The
-    # explicit src repartition also makes the edge side of every
-    # iteration join exchange-free (the BFS two-copy rationale).
-    par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)
-    # DISK_ONLY (r11): edge- and node-scale caches on the heap starve
-    # the execution pool at replica scale — the 100× vanilla session
-    # died UNABLE_TO_ACQUIRE_MEMORY with the default MEMORY_AND_DISK
-    # because the protected storage half of the unified pool held the
-    # cached edges while every iteration's sorts competed for the
-    # rest; disk caches cost one serialization pass and nothing at
-    # cluster heaps
-    edges_deg = (
-        edges.join(deg.hint("merge"), "src")
-        .repartition(par, "src")
-        .persist(StorageLevel.DISK_ONLY)
-    )
+    global _pagerank_final
+    # every relation this call caches is released below on failure as
+    # well as on success, and the previous call's rank state only once
+    # this call holds its own: a failed call leaves the session's
+    # caches as it found them
+    edges = edges_deg = ranks = None
+    try:
+        # persist the base edge relation for the setup phase (optimization
+        # round 14): it feeds deg, the deg-count, AND both sides of the
+        # edges_deg join — unpersisted, the orders⋈lineitem distinct
+        # pipeline was planned and EXECUTED four times at materialization
+        # (profiled: 4 × ~0.5 s identical 5.5 MB exchange-write stages)
+        edges = bipartite_edges(spark, sf_dir).persist(StorageLevel.DISK_ONLY)
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+        # Geometry-derived partition count for the persisted loop state
+        # (optimization round 14, guide §2): the caches previously pinned
+        # spark.sql.shuffle.partitions (32) partitions, and EVERY
+        # iteration's map stages — cache scan, sort, shuffle write — ran
+        # 32 near-empty tasks over ~5 MB of edges at sf0.1 (profiled
+        # 9-19 s of per-stage task run time carrying ~2 s of CPU). The
+        # explicit src repartition also makes the edge side of every
+        # iteration join exchange-free (the BFS two-copy rationale).
+        par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)
+        # DISK_ONLY (r11): edge- and node-scale caches on the heap starve
+        # the execution pool at replica scale — the 100× vanilla session
+        # died UNABLE_TO_ACQUIRE_MEMORY with the default MEMORY_AND_DISK
+        # because the protected storage half of the unified pool held the
+        # cached edges while every iteration's sorts competed for the
+        # rest; disk caches cost one serialization pass and nothing at
+        # cluster heaps
+        edges_deg = (
+            edges.join(deg.hint("merge"), "src")
+            .repartition(par, "src")
+            .persist(StorageLevel.DISK_ONLY)
+        )
+        n_nodes = deg.count()  # also materializes edges_deg's inputs
+        base = (1.0 - damping) / n_nodes
+        # Rank state rides eager DISK_ONLY localCheckpoints, not persist
+        # (optimization round 14, the BFS lineage rule): persist caches
+        # execution but does NOT truncate lineage, so iteration i's
+        # analyzed plan chained every previous iteration — analysis/AQE
+        # planning cost grew O(iters²) (profiled: 615 stages, ~8 s of
+        # driver gap on a 14.5 s wall at sf0.1). The checkpoint keeps each
+        # iteration's plan a flat LogicalRDD join — measured 13.3-13.9 →
+        # 5.6-8.4 s same-session A/B. The checkpoint also materializes
+        # eagerly, replacing the per-iteration count() job. Rank values
+        # can differ from the persist spelling by float summation order
+        # (≤1 ulp, ~1e-15 relative measured); every consumer is
+        # insensitive by construction — pagerank_bipartite rounds to 9 dp
+        # and is rows-only, the mass audit's verdicts carry explicit
+        # tolerances, and test_graph.py pins tolerance-based invariants.
+        ranks = (
+            deg.select("src", F.lit(1.0 / n_nodes).alias("rank"))
+            .repartition(par, "src")
+            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        )
+        for _ in range(iters):
+            contribs = (
+                edges_deg.join(ranks.hint("merge"), "src")
+                .select("dst", (F.col("rank") / F.col("degree")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            new_ranks = (
+                contribs.select(
+                    F.col("dst").alias("src"),
+                    (F.lit(base) + F.lit(damping) * F.col("contrib")).alias("rank"),
+                )
+                # re-keying on the renamed node column keeps the cached
+                # rank state co-partitioned with edges_deg: the alias
+                # erases the groupBy's hash partitioning metadata, so
+                # without this every iteration re-exchanged the edge side
+                .repartition(par, "src")
+                .localCheckpoint(
+                    eager=True, storageLevel=StorageLevel.DISK_ONLY
+                )
+            )
+            _release_local_checkpoint(ranks)
+            ranks = new_ranks
+    except BaseException:
+        if ranks is not None:
+            _release_local_checkpoint(ranks)
+        raise
+    finally:
+        for df in (edges_deg, edges):
+            if df is not None:
+                df.unpersist()
     # the returned rank state of the previous invocation — replaced,
     # never accumulated (the r7 ADVICE slot convention; the persist
     # spelling leaked one node-scale cache per call the same way)
-    global _pagerank_final
     if _pagerank_final is not None:
         _release_local_checkpoint(_pagerank_final)
-        _pagerank_final = None
-    n_nodes = deg.count()  # also materializes edges_deg's inputs
-    base = (1.0 - damping) / n_nodes
-    # Rank state rides eager DISK_ONLY localCheckpoints, not persist
-    # (optimization round 14, the BFS lineage rule): persist caches
-    # execution but does NOT truncate lineage, so iteration i's
-    # analyzed plan chained every previous iteration — analysis/AQE
-    # planning cost grew O(iters²) (profiled: 615 stages, ~8 s of
-    # driver gap on a 14.5 s wall at sf0.1). The checkpoint keeps each
-    # iteration's plan a flat LogicalRDD join — measured 13.3-13.9 →
-    # 5.6-8.4 s same-session A/B. The checkpoint also materializes
-    # eagerly, replacing the per-iteration count() job. Rank values
-    # can differ from the persist spelling by float summation order
-    # (≤1 ulp, ~1e-15 relative measured); every consumer is
-    # insensitive by construction — pagerank_bipartite rounds to 9 dp
-    # and is rows-only, the mass audit's verdicts carry explicit
-    # tolerances, and test_graph.py pins tolerance-based invariants.
-    ranks = (
-        deg.select("src", F.lit(1.0 / n_nodes).alias("rank"))
-        .repartition(par, "src")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    for _ in range(iters):
-        contribs = (
-            edges_deg.join(ranks.hint("merge"), "src")
-            .select("dst", (F.col("rank") / F.col("degree")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = (
-            contribs.select(
-                F.col("dst").alias("src"),
-                (F.lit(base) + F.lit(damping) * F.col("contrib")).alias("rank"),
-            )
-            # re-keying on the renamed node column keeps the cached
-            # rank state co-partitioned with edges_deg: the alias
-            # erases the groupBy's hash partitioning metadata, so
-            # without this every iteration re-exchanged the edge side
-            .repartition(par, "src")
-            .localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
-        )
-        _release_local_checkpoint(ranks)
-        ranks = new_ranks
-    edges_deg.unpersist()
-    edges.unpersist()
     _pagerank_final = ranks
     return ranks.select(F.col("src").alias("node"), "rank")
 
@@ -727,10 +738,6 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the call, replaced on the next one.
     Output is ≤{BFS_MAX_HOPS + 1} census rows of exact integers."""
     global _bfs_final
-    for df in _bfs_final:
-        _release_local_checkpoint(df)
-    _bfs_final = []
-
     from watermill_kinesis_spark.sources.tables import adaptive_partitions
 
     # AQE off for the LEVEL LOOP only (optimization round 14, guide
@@ -742,56 +749,60 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator (alternating A/B at sf0.1: 2.24/2.61 s AQE-on vs
     # 1.89/1.95 s off; identical plans otherwise). This is NOT a
     # local[32] tune: the loop's partition counts scale with input
-    # geometry, and the conf is restored in the existing ``finally``
+    # geometry, and the conf is restored in the ``finally`` below
     # before the returned census plan compiles, so the corpus-facing
-    # aggregate still runs under AQE.
+    # aggregate still runs under AQE. That ``finally`` also releases
+    # the edge caches, and on failure this call's level checkpoints; the
+    # previous call's levels are released only once this call holds its
+    # own, so a failed call leaves conf and caches as it found them.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # edge-relation partition count derived from the input geometry
-    # (optimization round 14, guide §2): the distinct (p, s) relation
-    # shuffles ~0.5× the lineitem parquet bytes, and EVERY level join
-    # stage iterates these partitions — a flat defaultParallelism
-    # pinned 32 near-empty tasks per level at sf0.1 (profiled ~0.2 s
-    # task-overhead wall per join stage for KB-scale frontiers)
-    par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)
-    dedup = (
-        li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
-        .repartition(F.col("p"), F.col("s"))
-        .distinct()
-    )
-    # TWO persisted copies, pre-partitioned on each traversal key
-    # (optimization round 13, guide §2.4 "two operations keyed the same
-    # way share one exchange"): every BFS level joins the edge relation
-    # once on s and once on p — with a single unkeyed persist each of
-    # the ≤2·BFS_MAX_HOPS level joins re-shuffled the full edge relation
-    # to its key; pre-partitioned copies make the edge side of every
-    # level join exchange-free (only the tiny frontier still shuffles).
-    # Memory cost is one extra edge copy — per-node-key partitioned, the
-    # same layout any production BFS keeps resident. The p-copy derives
-    # from the PERSISTED s-copy (optimization round 14): deriving both
-    # from the lazy dedup plan ran the scan+distinct pipeline twice,
-    # once per copy's materialization.
-    edges_s = dedup.repartition(par, "s").persist()
-    edges_p = edges_s.repartition(par, "p").persist()
-    seed = li.agg(F.min("l_suppkey").alias("k")).select(
-        (F.col("k") * 2 + 1).alias("node"), F.lit(0).alias("hop")
-    )
-    # Per-level FRONTIER checkpoints (optimization round 14, VERDICT
-    # r13 task 5): the former loop checkpointed the full accumulated
-    # visited set every level — O(levels·|V|) block-manager writes,
-    # with each superseded generation released by hand. Now only each
-    # level's frontier (the genuinely new rows) is materialized;
-    # ``visited`` is the lazy union of the ≤BFS_MAX_HOPS+1 flat
-    # checkpointed levels, so the anti-join and the final census read
-    # the same bytes as before while each level's job writes only
-    # frontier-sized data. Lineage still stays flat: every level plans
-    # against LogicalRDDs, never a growing recursive plan.
-    frontier = seed.localCheckpoint(eager=True)
-    levels = [frontier]
-    visited = frontier
+    edges_s = edges_p = None
+    levels = []
     try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        li = load_table(spark, sf_dir, "lineitem")
+        # edge-relation partition count derived from the input geometry
+        # (optimization round 14, guide §2): the distinct (p, s) relation
+        # shuffles ~0.5× the lineitem parquet bytes, and EVERY level join
+        # stage iterates these partitions — a flat defaultParallelism
+        # pinned 32 near-empty tasks per level at sf0.1 (profiled ~0.2 s
+        # task-overhead wall per join stage for KB-scale frontiers)
+        par = adaptive_partitions(spark, sf_dir, "lineitem", expand=0.5)
+        dedup = (
+            li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
+            .repartition(F.col("p"), F.col("s"))
+            .distinct()
+        )
+        # TWO persisted copies, pre-partitioned on each traversal key
+        # (optimization round 13, guide §2.4 "two operations keyed the same
+        # way share one exchange"): every BFS level joins the edge relation
+        # once on s and once on p — with a single unkeyed persist each of
+        # the ≤2·BFS_MAX_HOPS level joins re-shuffled the full edge relation
+        # to its key; pre-partitioned copies make the edge side of every
+        # level join exchange-free (only the tiny frontier still shuffles).
+        # Memory cost is one extra edge copy — per-node-key partitioned, the
+        # same layout any production BFS keeps resident. The p-copy derives
+        # from the PERSISTED s-copy (optimization round 14): deriving both
+        # from the lazy dedup plan ran the scan+distinct pipeline twice,
+        # once per copy's materialization.
+        edges_s = dedup.repartition(par, "s").persist()
+        edges_p = edges_s.repartition(par, "p").persist()
+        seed = li.agg(F.min("l_suppkey").alias("k")).select(
+            (F.col("k") * 2 + 1).alias("node"), F.lit(0).alias("hop")
+        )
+        # Per-level FRONTIER checkpoints (optimization round 14, VERDICT
+        # r13 task 5): the former loop checkpointed the full accumulated
+        # visited set every level — O(levels·|V|) block-manager writes,
+        # with each superseded generation released by hand. Now only each
+        # level's frontier (the genuinely new rows) is materialized;
+        # ``visited`` is the lazy union of the ≤BFS_MAX_HOPS+1 flat
+        # checkpointed levels, so the anti-join and the final census read
+        # the same bytes as before while each level's job writes only
+        # frontier-sized data. Lineage still stays flat: every level plans
+        # against LogicalRDDs, never a growing recursive plan.
+        frontier = seed.localCheckpoint(eager=True)
+        levels.append(frontier)
+        visited = frontier
         for hop in range(1, BFS_MAX_HOPS + 1):
             # bipartite PARITY (optimization round 14): the graph has
             # only supplier↔part edges and the seed is a supplier
@@ -830,16 +841,23 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .observe(obs, F.count(F.lit(1)).alias("n"))
                 .localCheckpoint(eager=True)
             )
-            if obs.get["n"] == 0:
-                _release_local_checkpoint(nxt)
-                break  # frontier exhausted — the graph is fully reached
             levels.append(nxt)
+            if obs.get["n"] == 0:
+                _release_local_checkpoint(levels.pop())
+                break  # frontier exhausted — the graph is fully reached
             visited = visited.unionByName(nxt)
             frontier = nxt
+    except BaseException:
+        for df in levels:
+            _release_local_checkpoint(df)
+        raise
     finally:
-        edges_s.unpersist(False)
-        edges_p.unpersist(False)
+        for df in (edges_s, edges_p):
+            if df is not None:
+                df.unpersist(False)
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+    for df in _bfs_final:
+        _release_local_checkpoint(df)
     _bfs_final = levels
     return (
         visited.groupBy("hop")

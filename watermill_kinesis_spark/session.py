@@ -12,6 +12,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: streaming checkpoint writer for engine sessions (see get_spark's notes)
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -31,6 +37,17 @@ def get_spark(app_name: str = "watermill-kinesis-spark", cpus: int | None = None
       the reference's map-overwrite semantics (marshaller.go:35-40).
     - UTC session timezone: parquet timestamps compare bit-identically
       against the DuckDB oracle.
+    - ``spark.sql.streaming.checkpointFileManagerClass``: Spark's own
+      FileSystem-based manager instead of its FileContext-based default.
+      Every trigger writes an offset-log entry, a commit-log entry and
+      one state-store delta per stateful partition. Without the native
+      Hadoop library the default forks ``chmod``/``readlink`` helper
+      processes from the driver JVM for every file: ~59 ms and 20 kernel
+      task creations per 1 KB file on a 4-core host, against ~16 ms and
+      4 for the FileSystem manager, which keeps the same contract and
+      on-disk layout (temp file, ``rename(2)`` publish, ``.crc`` side
+      files). The class moved package in Spark 4.1;
+      ``tests/test_streaming.py`` guards that it still resolves.
     """
     n = cpus or default_parallelism()
     # the fastdaemon worker entry point (see fastdaemon.py: CPython 3.12
@@ -71,6 +88,10 @@ def get_spark(app_name: str = "watermill-kinesis-spark", cpus: int | None = None
         # directories inside setup_spark_files — ~115 ms/task of pure
         # fixed latency, the dominant cost of every small Python stage
         .config("spark.python.daemon.module", "watermill_kinesis_spark.fastdaemon")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

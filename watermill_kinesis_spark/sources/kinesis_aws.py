@@ -987,9 +987,13 @@ class KinesisAwsStreamWriter(DataSourceStreamWriter):
 
 
 class KinesisAwsDataSource(DataSource):
-    """format("kinesis_aws") — streaming read from a real Kinesis
-    stream. Writes go through ``PublisherBuilder.with_kinesis()`` /
-    ``streaming.sink.KinesisPublisher`` (the produce side)."""
+    """format("kinesis_aws") — a Kinesis stream in all four quadrants:
+    batch and streaming reads (``reader`` / ``streamReader``, parallel
+    per-shard or the ``readerMode=simple`` fallback) and batch and
+    streaming writes (``writer`` / ``streamWriter``, executor-side
+    chunked PutRecords). ``PublisherBuilder.with_kinesis()`` /
+    ``streaming.sink.KinesisPublisher`` is the Watermill-shaped publish
+    API over the same PutRecords contract."""
 
     @classmethod
     def name(cls) -> str:

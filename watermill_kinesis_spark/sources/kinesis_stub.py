@@ -606,9 +606,6 @@ def file_stub_client(options) -> FileStubKinesisClient:
     return c
 
 
-    # -- producer API (boto3-shaped) ---------------------------------
-
-
 def _stub_put_records(self, StreamName=None, Records=None):
     """boto3-shaped PutRecords: routes each record to a shard by
     crc32(partition key) — stable like the service's MD5 routing —
